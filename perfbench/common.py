@@ -47,6 +47,16 @@ def run_op(name: str, fn) -> tuple[Op, object]:
     return Op(name, time.perf_counter() - t0), out
 
 
+def run_check(name: str, fn) -> str | None:
+    """Run one output check: ``fn()`` returns None when the output holds and
+    a message when it does not. An exception fails the check, so a missing
+    table reads as a failed check, not as a crashed run."""
+    op, msg = run_op(name, fn)
+    if not op.ok:
+        return f"{name}: {op.error}"
+    return None if msg is None else f"{name}: {msg}"
+
+
 def _sql_type(typ: pa.DataType) -> str | None:
     if pa.types.is_integer(typ):
         return "BIGINT"

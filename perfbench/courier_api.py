@@ -5,10 +5,9 @@ It serves the two endpoints of the reference's delivery system
 pipeline's ``paginate`` loop, and predicts what the pipeline must have stored
 after each day.
 
-Run day ``d`` has the run date ``ds_d = first_ds + d days``. Day 0 makes
-``history_days`` days of deliveries visible (the cold-start window covers up
-to 7 days); each later day adds ``per_day`` deliveries dated the day before
-its run date. Fixed shares of each later day are adversarial:
+Run day ``d`` has the run date ``ds_d = first_ds + d days``. Every day adds
+``per_day`` deliveries dated the day before its run date (day 0's fall inside
+the 7-day cold-start window). Fixed shares of each later day are adversarial:
 
 - replays: an already loaded delivery id, re-sent with a new timestamp and an
   altered payload (the SCD0 insert-ignore must drop it);
@@ -34,7 +33,6 @@ from dataclasses import dataclass, field
 from datetime import datetime, timedelta
 
 TS_FMT = "%Y-%m-%d %H:%M:%S"
-PAGE_CAP_RECORDS = 200 * 50  # sources.rest MAX_PAGES x PAGE_SIZE
 DDS_WM_DEFAULT = datetime(2022, 1, 1)  # plans.promotions.DDS_WM_DEFAULT
 COLD_START = timedelta(days=7)  # plans.promotions.load_deliveries_job
 
@@ -79,21 +77,16 @@ class CourierApi:
         seed: int,
         first_ds: datetime,
         n_days: int,
-        n_couriers: int = 500,
-        per_day: int = 2_000,
-        history_days: int = 3,
+        n_couriers: int,
+        per_day: int,
     ) -> None:
-        if not 1 <= history_days <= 7:
-            raise ValueError("history_days must lie in the 7-day cold-start window")
-        if history_days * per_day * (1 + SHARE_BAD) >= PAGE_CAP_RECORDS:
-            raise ValueError("the first day would hit the 200-page extraction cap")
         self.first_ds = first_ds
         self.n_days = n_days
         self.counters = Counters()
         rng = random.Random(seed)
         self._names = self._courier_names(rng, n_couriers, n_days)
         # (arrival day, record), sorted by (delivery_ts, delivery_id)
-        self._records = self._deliveries(rng, n_couriers, per_day, history_days)
+        self._records = self._deliveries(rng, n_couriers, per_day)
         self._visible_day: int | None = None
         self._visible: list[dict] = []
         self._visible_ts: list[str] = []
@@ -138,19 +131,16 @@ class CourierApi:
                 rec["tip_sum"] = -rec["tip_sum"] - 0.01
         return rec
 
-    def _deliveries(self, rng, n_couriers, per_day, history_days) -> list[tuple[int, dict]]:
+    def _deliveries(self, rng, n_couriers, per_day) -> list[tuple[int, dict]]:
         couriers = [f"c{i:04d}" for i in range(n_couriers)]
         out: list[tuple[int, dict]] = []
         seq = 0
         loaded: list[dict] = []  # records an earlier day's fetch window covered
         for day in range(self.n_days):
             ds = self.first_ds + timedelta(days=day)
-            span_days = history_days if day == 0 else 1
-            span = 86_400 * span_days
-            n_new = per_day * span_days
             fresh = []
-            for _ in range(n_new):
-                d_ts = ds - timedelta(seconds=1 + rng.randrange(span))
+            for _ in range(per_day):
+                d_ts = ds - timedelta(seconds=1 + rng.randrange(86_400))
                 bad = rng.random() < SHARE_BAD
                 fresh.append(self._delivery(rng, seq, rng.choice(couriers), d_ts, bad))
                 seq += 1

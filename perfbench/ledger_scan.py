@@ -7,6 +7,7 @@ with the query's DuckDB oracle from the registry by order-insensitive digest.
 
 from __future__ import annotations
 
+import glob
 import os
 import time
 
@@ -14,7 +15,7 @@ import duckdb
 
 import probes
 import tpch
-from common import Context, Op, digest, run_op
+from common import Context, Op, digest, run_check, run_op
 
 # The benchmark's run budget (48 runs in 3,420 s) leaves out the costliest
 # query (incremental_mart_maintenance) and the three over the events table
@@ -35,6 +36,8 @@ QUERIES = (
 
 
 class LedgerScan:
+    min_passes = 1
+
     def __init__(self, ctx: Context) -> None:
         self.ctx = ctx
         self.sf = ctx.sizes["sf"]
@@ -45,13 +48,14 @@ class LedgerScan:
     def describe(self) -> dict:
         return {"sf": self.sf, "rows": tpch.sizes(self.sf), "queries": list(QUERIES)}
 
-    def setup(self) -> None:
+    def setup(self) -> list[Op]:
+        """Write the inputs and run an untimed pass; returns its operations."""
         from airflow_courier_payout_ledger_pipeline_spark.registry import all_queries
 
         self.input_bytes = tpch.write(self.sf_dir, self.ctx.seed, self.sf)
         self.queries = all_queries()
         # untimed warm-up: bucketed lake, schema memos, codegen, JIT
-        self.run_pass("warmup", traced=False, check=False)
+        return self.run_pass("warmup", traced=False, check=False)
 
     def has_next(self) -> bool:
         return True
@@ -87,7 +91,8 @@ class LedgerScan:
             if out is not None:
                 op.layers, table = out
                 if check:
-                    self.digests[name].append(digest(table))
+                    dop, got = run_op("digest", lambda t=table: digest(t))
+                    self.digests[name].append(got if dop.ok else f"no digest: {dop.error}")
             ops.append(op)
         return ops
 
@@ -112,18 +117,20 @@ class LedgerScan:
     def finish(self) -> tuple[int, list[str]]:
         """Compare every timed output with its oracle. Returns the number of
         extra checks made (none: each comparison belongs to its query's
-        operation) and one message per operation whose output differs."""
-        expected = self.oracle_digests()
+        operation) and one message per operation whose output differs. If the
+        oracles cannot be computed, every comparison fails."""
+        expected: dict[str, str] = {}
+        error = run_check("oracles", lambda: expected.update(self.oracle_digests()))
         failures = [
-            f"{q}: output {got} differs from oracle {expected[q]}"
+            f"{q}: {error}" if error else f"{q}: output {got} differs from oracle {expected[q]}"
             for q in QUERIES
             for got in self.digests[q]
-            if got != expected[q]
+            if error or got != expected[q]
         ]
         return 0, failures
 
     def storage_ratio(self) -> float:
-        written = sum(
-            probes.tree_bytes(os.path.join(self.ctx.work, d)) for d in ("tmp", "warehouse")
-        )
-        return written / self.input_bytes
+        """Bytes of the bucketed lakes ``courier_ledger_bucketed`` writes
+        (``cl_bucketed_*`` temp roots) per input parquet byte."""
+        lakes = glob.glob(os.path.join(self.ctx.work, "tmp", "cl_bucketed_*"))
+        return sum(probes.tree_bytes(d) for d in lakes) / max(self.input_bytes, 1)

@@ -1,8 +1,9 @@
 """``nightly_chain``: the reference DAG over simulated days on one warm session.
 
-Set-up seeds the fake delivery API and runs the cold-start day (its 7-day
-window loads the API's history). Each timed pass is the next day: the seven
-``promotions`` jobs in DAG order, with ``sleep_s=0``.
+Set-up seeds the fake delivery API and runs the cold-start day (day 0, the
+first fetch over the 7-day window). Each timed pass is the next day: the seven
+``promotions`` jobs in DAG order, with ``sleep_s=0``. A run times at least two
+days, so ``pass_s`` is a median and not one day's time.
 
 After the last day the run checks the lake against the generator's
 predictions (STG, fact and quarantine row counts, both watermarks, every
@@ -24,7 +25,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 import probes
-from common import Context, Op, digest, run_op
+from common import Context, Op, digest, run_check, run_op
 from courier_api import CourierApi
 
 FIRST_DS = datetime(2023, 6, 1)  # set-up loads May; the timed days deliver in June
@@ -106,17 +107,14 @@ def mart_oracle_sql() -> str:
 
 
 class NightlyChain:
+    min_passes = 2  # timed days a run makes at least
+
     def __init__(self, ctx: Context) -> None:
         self.ctx = ctx
         self.root = os.path.join(ctx.work, "lake")
         sizes = ctx.sizes
         self.api = CourierApi(
-            ctx.seed,
-            FIRST_DS,
-            MAX_DAYS,
-            n_couriers=sizes["couriers"],
-            per_day=sizes["per_day"],
-            history_days=sizes["history_days"],
+            ctx.seed, FIRST_DS, MAX_DAYS, n_couriers=sizes["couriers"], per_day=sizes["per_day"]
         )
         self.day = 0
 
@@ -125,17 +123,17 @@ class NightlyChain:
         return {
             "couriers": s["couriers"],
             "deliveries_per_day": s["per_day"],
-            "history_days": s["history_days"],
             "first_ds": self.api.ds(0),
         }
 
-    def setup(self) -> None:
+    def setup(self) -> list[Op]:
+        """Seed the lake with the cold-start day; returns its (untimed) jobs."""
         from airflow_courier_payout_ledger_pipeline_spark.plans import promotions
         from airflow_courier_payout_ledger_pipeline_spark.sources.lakehouse import Lakehouse
 
         self.P = promotions
         self.lake = Lakehouse(self.root)
-        self.run_pass("day0", traced=False)
+        return self.run_pass("day0", traced=False)
 
     def has_next(self) -> bool:
         return self.day < MAX_DAYS
@@ -171,12 +169,12 @@ class NightlyChain:
         self.day += 1
         if traced:
             rest = self.api.counters
+            fetched = rest.delivery_records - rest0.delivery_records
             ops[-1].layers.update(
                 fetch_s=rest.fetch_s - rest0.fetch_s,
                 pages=rest.pages - rest0.pages,
                 records=rest.records - rest0.records,
-                new_facts_per_record=(_rows(fct) - facts0)
-                / (rest.delivery_records - rest0.delivery_records),
+                new_facts_per_record=(_rows(fct) - facts0) / fetched if fetched else 0.0,
                 quarantined_rows=_rows(quarantine) - q0,
                 live_files=sum(1 for f in files if f.endswith(".parquet")),
             )
@@ -196,62 +194,67 @@ class NightlyChain:
         table = table.set_column(i, table.field(i), pa.array(values, col.type))
         pq.write_table(table, path)
 
-    def _mart_checks(self, con) -> dict[str, bool]:
-        for t in ("fct_deliveries", "dm_couriers", "dm_orders", "dm_timestamps"):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet("
-                f"'{os.path.join(self.root, 'dds', t)}/*.parquet')"
-            )
-        cdm = os.path.join(self.root, "cdm")
-        con.execute(f"CREATE VIEW oracle AS SELECT {MART_COLUMNS} FROM ({mart_oracle_sql()})")
-        mart = con.execute(
-            f"SELECT {MART_COLUMNS} FROM read_parquet('{cdm}/dm_courier_ledger/*.parquet')"
-        ).arrow()
-        want = con.execute(f"SELECT * FROM oracle WHERE ({MART_CLEAN}) IS TRUE").arrow()
-        n_bad = con.execute(
-            f"SELECT count(*) FROM oracle WHERE ({MART_CLEAN}) IS NOT TRUE"
-        ).fetchone()[0]
+    def _mart_check(self) -> str | None:
+        if self.ctx.corrupt == "mart":
+            self._corrupt_mart()
+        dds, cdm = os.path.join(self.root, "dds"), os.path.join(self.root, "cdm")
+        con = duckdb.connect()
+        try:
+            for t in ("fct_deliveries", "dm_couriers", "dm_orders", "dm_timestamps"):
+                con.execute(
+                    f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{dds}/{t}/*.parquet')"
+                )
+            con.execute(f"CREATE VIEW oracle AS SELECT {MART_COLUMNS} FROM ({mart_oracle_sql()})")
+            mart = con.execute(
+                f"SELECT {MART_COLUMNS} FROM read_parquet('{cdm}/dm_courier_ledger/*.parquet')"
+            ).arrow()
+            want = con.execute(f"SELECT * FROM oracle WHERE ({MART_CLEAN}) IS TRUE").arrow()
+            n_bad = con.execute(
+                f"SELECT count(*) FROM oracle WHERE ({MART_CLEAN}) IS NOT TRUE"
+            ).fetchone()[0]
+        finally:
+            con.close()
         got_bad = _rows(os.path.join(cdm, "dm_courier_ledger_quarantine"))
-        return {
-            "mart_equals_oracle": digest(mart) == digest(want),
-            "mart_quarantine_equals_oracle": got_bad == n_bad,
-        }
+        failed = []
+        if digest(mart) != digest(want):
+            failed.append("mart differs from oracle")
+        if got_bad != n_bad:
+            failed.append(f"mart quarantine holds {got_bad} rows, oracle {n_bad}")
+        return "; ".join(failed) or None
 
     def _watermark(self, layer: str, key: str) -> str | None:
-        files = _files(os.path.join(self.root, layer, "srv_wf_settings"))
-        rows = pq.read_table(files).to_pylist() if files else []
+        rows = pq.read_table(_files(os.path.join(self.root, layer, "srv_wf_settings"))).to_pylist()
         docs = [r["workflow_settings"] for r in rows if r["workflow_key"] == key]
         return json.loads(docs[0])["last_loaded_ts"] if len(docs) == 1 else None
+
+    def _courier_names(self) -> dict[str, str]:
+        rows = pq.read_table(_files(os.path.join(self.root, "dds", "dm_couriers"))).to_pylist()
+        return {r["courier_key"]: r["courier_name"] for r in rows}
 
     def finish(self) -> tuple[int, list[str]]:
         """The run's output checks; returns (checks made, failed checks)."""
         exp = self.api.expected(self.day)
         dds = os.path.join(self.root, "dds")
-        names = pq.read_table(_files(os.path.join(dds, "dm_couriers"))).to_pylist()
         got = {
-            "stg_rows": _rows(os.path.join(self.root, "stg", "deliverysystem_deliveries")),
-            "fact_rows": _rows(os.path.join(dds, "fct_deliveries")),
-            "quarantined_rows": _rows(os.path.join(dds, "fct_deliveries_quarantine")),
-            "stg_watermark": self._watermark("stg", self.P.STG_WM_KEY),
-            "dds_watermark": self._watermark("dds", self.P.DDS_WM_KEY),
-            "courier_names": {r["courier_key"]: r["courier_name"] for r in names},
+            "stg_rows": lambda: _rows(os.path.join(self.root, "stg", "deliverysystem_deliveries")),
+            "fact_rows": lambda: _rows(os.path.join(dds, "fct_deliveries")),
+            "quarantined_rows": lambda: _rows(os.path.join(dds, "fct_deliveries_quarantine")),
+            "stg_watermark": lambda: self._watermark("stg", self.P.STG_WM_KEY),
+            "dds_watermark": lambda: self._watermark("dds", self.P.DDS_WM_KEY),
+            "courier_names": self._courier_names,
         }
-        failures = [
-            f"{k}: got {v!r}, predicted {getattr(exp, k)!r}"
-            if not isinstance(v, dict)
-            else f"{k}: {sum(v.get(c) != n for c, n in exp.courier_names.items())} differ"
-            for k, v in got.items()
-            if v != getattr(exp, k)
-        ]
-        if self.ctx.corrupt == "mart":
-            self._corrupt_mart()
-        con = duckdb.connect()
-        try:
-            mart_checks = self._mart_checks(con)
-        finally:
-            con.close()
-        failures += [name for name, ok in mart_checks.items() if not ok]
-        return len(got) + len(mart_checks), failures
+
+        def predicted(name: str) -> str | None:
+            value, want = got[name](), getattr(exp, name)
+            if value == want:
+                return None
+            if isinstance(want, dict):
+                return f"{sum(value.get(k) != v for k, v in want.items())} differ"
+            return f"got {value!r}, predicted {want!r}"
+
+        results = [run_check(name, lambda n=name: predicted(n)) for name in got]
+        results.append(run_check("mart", self._mart_check))
+        return len(results), [r for r in results if r is not None]
 
     def storage_ratio(self) -> float:
-        return probes.tree_bytes(self.root) / self.api.counters.json_bytes
+        return probes.tree_bytes(self.root) / max(self.api.counters.json_bytes, 1)

@@ -41,7 +41,7 @@ MAX_CPUS = 4
 
 #: workload -> default sizes (overridable for the self-test)
 SIZES = {
-    "nightly_chain": {"couriers": 500, "per_day": 2_000, "history_days": 1},
+    "nightly_chain": {"couriers": 500, "per_day": 1_000},
     "ledger_scan": {"sf": 0.02},
 }
 MAX_PASSES = 60
@@ -56,7 +56,6 @@ def _args(argv):
     # size overrides and output corruption, for perfbench/selftest.py
     p.add_argument("--sf", type=float)
     p.add_argument("--per-day", type=int)
-    p.add_argument("--history-days", type=int)
     p.add_argument("--corrupt", choices=("oracle", "mart"))
     return p.parse_args(argv)
 
@@ -167,11 +166,12 @@ def _pass_layers(p: dict, events) -> dict:
 
 
 def _run_passes(wl, cpu, seconds: float, trace: bool) -> list[dict]:
-    """Timed passes until ``seconds`` have passed (at least one). A traced run
-    alternates untraced and traced passes and runs at least untraced, traced,
-    untraced, so the warm-up drift between consecutive passes cancels out of
-    the tracing overhead."""
+    """Timed passes until ``seconds`` have passed, and at least the workload's
+    ``min_passes``. A traced run alternates untraced and traced passes and
+    runs at least untraced, traced, untraced, so the warm-up drift between
+    consecutive passes cancels out of the tracing overhead."""
     passes: list[dict] = []
+    min_passes = max(wl.min_passes, 3 if trace else 1)
     t0 = time.monotonic()
     while len(passes) < MAX_PASSES and wl.has_next():
         traced = trace and len(passes) % 2 == 1
@@ -188,7 +188,7 @@ def _run_passes(wl, cpu, seconds: float, trace: bool) -> list[dict]:
                 "cpu": {k: v - c0[k] for k, v in cpu.sample().items()} if traced else {},
             }
         )
-        if len(passes) >= (3 if trace else 1) and time.monotonic() - t0 >= seconds:
+        if len(passes) >= min_passes and time.monotonic() - t0 >= seconds:
             break
     return passes
 
@@ -208,7 +208,7 @@ def _measure(args, work: str, cpus: int, sizes: dict) -> dict:
         else:
             from nightly_chain import NightlyChain as Workload
         wl = Workload(ctx)
-        wl.setup()
+        warmup = wl.setup()
         setup_s = time.monotonic() - T_START
         passes = _run_passes(wl, probes.ProcessCpu(jvm_pid), args.seconds, bool(args.trace))
         extra_checks, check_failures = wl.finish()
@@ -216,6 +216,7 @@ def _measure(args, work: str, cpus: int, sizes: dict) -> dict:
             "session_s": session_s,
             "setup_s": setup_s,
             "passes": passes,
+            "warmup_ops": [vars(op) for op in warmup],
             "extra_checks": extra_checks,
             "check_failures": check_failures,
             "peak_rss_mb": probes.peak_rss_mb(jvm_pid),
@@ -238,7 +239,7 @@ def _metrics(run: dict, trace: bool, work: str, per_layer: list[dict]) -> tuple[
     from statistics import median, quantiles
 
     passes = run["passes"]
-    ops = [op for p in passes for op in p["ops"]]
+    ops = run["warmup_ops"] + [op for p in passes for op in p["ops"]]
     failures = [f"{op['name']}: {op['error']}" for op in ops if not op["ok"]]
     failures += run["check_failures"]
     attempted = len(ops) + run["extra_checks"]
@@ -256,8 +257,8 @@ def _metrics(run: dict, trace: bool, work: str, per_layer: list[dict]) -> tuple[
         "setup_s": run["setup_s"],
         "attempted": attempted,
         "failures": failures,
-        # a run pools only 7 (nightly_chain) or 11 (ledger_scan) operations, so
-        # these percentiles are single operations' times: reported, not gated
+        # a run pools only 14 (nightly_chain) or 11 (ledger_scan) operations,
+        # so these percentiles are single operations' times: reported, not gated
         "op_s": {
             "p50": median(op_times),
             "p90": quantiles(op_times, n=10, method="inclusive")[8],
@@ -295,7 +296,7 @@ def main(argv=None) -> int:
         bench = json.load(fh)
     cpus = min(MAX_CPUS, len(os.sched_getaffinity(0)))
     sizes = dict(SIZES[args.workload])
-    for key, val in (("sf", args.sf), ("per_day", args.per_day), ("history_days", args.history_days)):
+    for key, val in (("sf", args.sf), ("per_day", args.per_day)):
         if val is not None:
             sizes[key] = val
     work = os.path.join(WORK_ROOT, f"{args.workload}-{args.seed}-{os.getpid()}")

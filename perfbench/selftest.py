@@ -2,15 +2,15 @@
 
     python3 perfbench/selftest.py
 
-Run from the repository root (about three minutes on four cores). It checks
+Run from the repository root (about five minutes on four cores). It checks
 that:
 
 - ``BENCHMARK.json`` is well formed (keys, name and unit syntax, bounds);
 - each workload, run untraced at a tiny size (``ledger_scan`` at sf 0.001,
-  ``nightly_chain`` with one set-up day and one timed day of 200 deliveries),
-  passes its output checks and prints every ``end_to_end`` metric with its
-  unit;
-- each workload, run traced, prints every ``per_layer`` metric with its unit;
+  ``nightly_chain`` with days of 200 deliveries), passes its output checks and
+  prints every ``end_to_end`` metric with its unit;
+- each workload, run traced, also passes its output checks (the probes do not
+  change results) and prints every ``per_layer`` metric with its unit;
 - each output check can fail: with one oracle digest altered
   (``ledger_scan``) or one mart row's reward altered (``nightly_chain``) the
   run reports ``correct: false``;
@@ -33,7 +33,7 @@ NAME = re.compile(r"^[A-Za-z0-9][A-Za-z0-9_.-]{0,63}$")
 UNIT = re.compile(r"^[A-Za-z0-9_/%.-]{1,16}$")
 TINY = {
     "ledger_scan": ["--sf", "0.001"],
-    "nightly_chain": ["--per-day", "200", "--history-days", "1"],
+    "nightly_chain": ["--per-day", "200"],
 }
 
 
@@ -106,11 +106,17 @@ def main() -> int:
             assert res["metrics"][m["name"]]["value"] > 0, (name, m["name"])
         print(f"{name}: untraced run correct, {len(res['metrics'])} metrics", flush=True)
 
-        code, res = run(REPO, name, 1, "--corrupt", corrupt[name])
+        code, res = run(REPO, name, 1)
         assert code == 0 and res is not None, name
         check_metrics(res, bench["per_layer"], f"{name} traced")
+        assert res["correct"] and res["failed"] == 0, (name, res)
+        print(f"{name}: traced run correct, {len(res['metrics'])} metrics", flush=True)
+
+        code, res = run(REPO, name, 0, "--corrupt", corrupt[name])
+        assert code == 0 and res is not None, name
+        check_metrics(res, bench["end_to_end"], f"{name} corrupted")
         assert not res["correct"] and res["failed"] >= 1, (name, res)
-        print(f"{name}: traced run, {corrupt[name]} corrupted -> correct=false", flush=True)
+        print(f"{name}: {corrupt[name]} corrupted -> correct=false", flush=True)
 
     bare = os.path.join(REPO, ".perfbench_work", "selftest-bare")
     shutil.rmtree(bare, ignore_errors=True)
