@@ -48,6 +48,7 @@ from airflow_courier_payout_ledger_pipeline_spark.operators.similarity import (
     merge_ivf_list_states,
     residual_frame,
 )
+from airflow_courier_payout_ledger_pipeline_spark.session import empty_frame
 from airflow_courier_payout_ledger_pipeline_spark.sources.lakehouse import Lakehouse
 
 #: index table names under the caller's layer
@@ -150,7 +151,7 @@ def _read_codes(
     vs = _committed_codes_versions(lake, layer)
     schema = _codes_schema(id_field)
     if not vs:
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
     base = _manifest_cache_key(lake, layer)
     vkey = None if base is None else (*base, tuple(vs), id_field.name)
     if vkey is None or vkey not in _VALIDATED_CODES:
@@ -262,10 +263,10 @@ def build_residual_ivfpq_index(
         id_field = emb.select(F.col(id_col)).schema.fields[0]
         return lake.commit_multi(
             [
-                (spark.createDataFrame([], _codes_schema(id_field)), layer, CODES),
-                (spark.createDataFrame([], _CENTROIDS_SCHEMA), layer, CENTROIDS),
-                (spark.createDataFrame([], _CODEBOOKS_SCHEMA), layer, CODEBOOKS),
-                (spark.createDataFrame([], _STATE_SCHEMA), layer, LIST_STATE),
+                (empty_frame(spark, _codes_schema(id_field)), layer, CODES),
+                (empty_frame(spark, _CENTROIDS_SCHEMA), layer, CENTROIDS),
+                (empty_frame(spark, _CODEBOOKS_SCHEMA), layer, CODEBOOKS),
+                (empty_frame(spark, _STATE_SCHEMA), layer, LIST_STATE),
             ]
         )
     mode = _resolve_assign_mode(assign_mode, centroids)

@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from airflow_courier_payout_ledger_pipeline_spark.session import empty_frame
+
 
 def _spread_corpus(df: DataFrame) -> DataFrame:
     """Round-robin repartition of a CORPUS side to the session's parallelism
@@ -797,7 +799,7 @@ def ivf_variant_hits(
         )
         ann = a if ann is None else ann.unionByName(a)
     if ann is None:  # every variant empty: no hits anywhere
-        return spark.createDataFrame([], "variant string, nprobe int, n_hit bigint")
+        return empty_frame(spark, "variant string, nprobe int, n_hit bigint")
     return (
         truth.select("query_id", "neighbor_id")
         .join(ann, ["query_id", "neighbor_id"])

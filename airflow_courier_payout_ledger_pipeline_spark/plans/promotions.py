@@ -23,6 +23,9 @@ from airflow_courier_payout_ledger_pipeline_spark.operators.merge import (
 from airflow_courier_payout_ledger_pipeline_spark.operators.watermark import (
     TS_FMT,
     WatermarkStore,
+    cursor_lit,
+    cursor_max,
+    parse_cursor,
 )
 from airflow_courier_payout_ledger_pipeline_spark.plans.ledger import courier_ledger
 from airflow_courier_payout_ledger_pipeline_spark.sources.lakehouse import Lakehouse
@@ -123,9 +126,9 @@ def load_deliveries_job(
         lake.append(new_rows, "stg", "deliverysystem_deliveries")
 
     stg = lake.read(spark, "stg", "deliverysystem_deliveries", S.STG_DELIVERIES_SCHEMA)
-    row = stg.agg(F.count("*").alias("n"), F.max("delivery_ts").alias("mx")).first()
+    row = stg.agg(F.count("*").alias("n"), cursor_max("delivery_ts").alias("mx")).first()
     if row.n > 0:  # non-empty guard, modules/load_deliveries.py:70
-        store.write_last_loaded_ts(spark, STG_WM_KEY, row.mx)
+        store.write_last_loaded_ts(spark, STG_WM_KEY, parse_cursor(row.mx))
     return len(records)
 
 
@@ -135,11 +138,12 @@ def load_deliveries_job(
 def _new_stg_deliveries(spark: SparkSession, lake: Lakehouse) -> DataFrame:
     """The shared increment CTE (sql/deliveries_stg_to_dds.sql:2-17): bronze rows
     strictly after the DDS watermark, JSON-extracted into typed columns (P1/P2).
-    The cursor binds driver-side → parquet predicate pushdown on delivery_ts."""
+    The cursor binds driver-side as a session-zone literal → parquet predicate
+    pushdown on delivery_ts."""
     wm = _dds_store(lake).read_last_loaded_ts(spark, DDS_WM_KEY, DDS_WM_DEFAULT)
     stg = lake.read(spark, "stg", "deliverysystem_deliveries", S.STG_DELIVERIES_SCHEMA)
     j = "json_response"
-    return stg.filter(F.col("delivery_ts") > F.lit(wm)).select(
+    return stg.filter(F.col("delivery_ts") > cursor_lit(wm)).select(
         F.get_json_object(j, "$.delivery_id").alias("delivery_key"),
         F.get_json_object(j, "$.order_id").alias("order_key"),
         F.col("delivery_ts").alias("ts"),
@@ -174,7 +178,7 @@ def _new_stg_orders(spark: SparkSession, lake: Lakehouse) -> DataFrame:
     wm = _dds_store(lake).read_last_loaded_ts(spark, DDS_WM_KEY, DDS_WM_DEFAULT)
     stg = lake.read(spark, "stg", "deliverysystem_deliveries", S.STG_DELIVERIES_SCHEMA)
     j = "json_response"
-    return stg.filter(F.col("delivery_ts") > F.lit(wm)).select(
+    return stg.filter(F.col("delivery_ts") > cursor_lit(wm)).select(
         F.get_json_object(j, "$.order_id").alias("order_key"),
         F.get_json_object(j, "$.order_ts").cast("timestamp").alias("order_ts"),
     )
@@ -261,7 +265,7 @@ def deliveries_stg_to_dds_job(spark: SparkSession, lake: Lakehouse) -> None:
     nd = _new_stg_deliveries(spark, lake)
     nd.cache()  # one snapshot feeds both the fact write and the cursor (M3)
     try:
-        cursor = nd.agg(F.max("ts")).first()[0]  # ts_cursor, :19-21
+        cursor = parse_cursor(nd.agg(cursor_max("ts")).first()[0])  # ts_cursor, :19-21
 
         dmo = lake.read(spark, "dds", "dm_orders", S.DM_ORDERS_SCHEMA)
         dmt = lake.read(spark, "dds", "dm_timestamps", S.DM_TIMESTAMPS_SCHEMA)

@@ -10,7 +10,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -58,3 +60,15 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def empty_frame(spark: SparkSession, schema: StructType | str) -> DataFrame:
+    """An empty frame of ``schema`` (a StructType or DDL string), built from an
+    empty Arrow table. Spark turns that into an empty ``LocalRelation`` on the
+    JVM: no Python-worker task ever runs for it, and the optimizer sees the
+    emptiness, so joins and unions against it are pruned at planning time.
+    ``createDataFrame([], schema)`` instead builds a Python RDD whose every
+    downstream stage starts Python workers."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    return spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)

@@ -32,6 +32,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from airflow_courier_payout_ledger_pipeline_spark.session import empty_frame
+
 #: Rows per database round-trip. Too small → chatty reads; the default of many
 #: drivers (Postgres: fetch-all) OOMs an executor on a big slice.
 DEFAULT_FETCHSIZE = 10_000
@@ -608,7 +610,7 @@ class JdbcWarehouse:
         except Exception as e:
             if not self._is_missing_table(e, name):
                 raise
-            return spark.createDataFrame([], schema)
+            return empty_frame(spark, schema)
         return df.select(
             *[
                 F.from_json(F.col(f.name), f.dataType).alias(f.name)

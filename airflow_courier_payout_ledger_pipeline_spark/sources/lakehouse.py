@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from airflow_courier_payout_ledger_pipeline_spark.session import empty_frame
+
 
 class ConcurrentCommitError(RuntimeError):
     """A second manifest committer raced this one (single-writer contract
@@ -56,7 +58,7 @@ class Lakehouse:
         """Read a table; a never-written table reads as empty with its declared
         schema (first-run bootstrap)."""
         if not self.exists(layer, table):
-            return spark.createDataFrame([], schema)
+            return empty_frame(spark, schema)
         return spark.read.schema(schema).parquet(self.path(layer, table))
 
     def read_evolved(self, spark: SparkSession, layer: str, table: str) -> DataFrame:
@@ -476,7 +478,7 @@ class Lakehouse:
         files a snapshot's log entry lists."""
         vs = self.as_versions(self.current_manifest().get(f"{layer}/{table}"))
         if not vs:
-            return spark.createDataFrame([], schema)
+            return empty_frame(spark, schema)
         if len(vs) == 1:
             return self.read_versioned(spark, layer, table, schema, version=vs[0])
         paths = []
@@ -502,7 +504,7 @@ class Lakehouse:
         historical ``version`` (time travel). Never-written tables read empty."""
         v = self.current_version(layer, table) if version is None else version
         if v is None:
-            return spark.createDataFrame([], schema)
+            return empty_frame(spark, schema)
         path = self.root / layer / table / f"v={v}"
         if not path.exists():
             raise FileNotFoundError(
@@ -886,7 +888,7 @@ class Lakehouse:
                 .filter(F.col(partition_col).isin(parts))
             )
         else:
-            existing = spark.createDataFrame([], schema)
+            existing = empty_frame(spark, schema)
         merged = scd1_upsert(existing, increment, list(keys), tiebreaker=tiebreaker)
 
         final = Path(self.path(layer, table))

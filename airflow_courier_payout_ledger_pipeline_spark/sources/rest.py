@@ -21,7 +21,9 @@ from __future__ import annotations
 import json
 import time
 from collections.abc import Callable, Iterator, Sequence
+from datetime import datetime
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 PAGE_SIZE = 50  # modules/load_couriers.py:12
@@ -95,24 +97,30 @@ def records_to_bronze(
 ) -> DataFrame:
     """Raw records → bronze rows: typed key column(s) + the full JSON payload kept
     verbatim as text (``json_response``), mirroring the STG DDLs
-    (sql/DDL_stg.deliverysystem_deliveries.sql:5-10)."""
-    from datetime import datetime  # noqa: PLC0415
+    (sql/DDL_stg.deliverysystem_deliveries.sql:5-10).
 
-    rows = []
-    for rec in records:
-        row: list = [rec[key_field]]
-        if ts_field is not None:
-            ts = rec[ts_field]
-            if isinstance(ts, str):
-                ts = datetime.fromisoformat(ts.replace(" ", "T")[:26])
-            row.append(ts)
-        row.append(json.dumps(rec, ensure_ascii=False, default=str))
-        rows.append(tuple(row))
+    The frame is built from a ``pyarrow.Table``, which Spark turns into a
+    ``LocalRelation`` on the JVM: no Python worker runs for it, in this job or
+    any downstream one. The timestamp column is naive and reads in the
+    *session* zone, the same zone ``cast(json ->> 'ts' as timestamp)`` uses
+    downstream, so the driver process's own zone never shifts a payload
+    timestamp."""
+    columns = {key_col: pa.array([rec[key_field] for rec in records], pa.string())}
+    fields = [f"{key_col} string"]
     if ts_field is not None:
-        schema = f"{key_col} string, {ts_col or 'ts'} timestamp, json_response string"
-    else:
-        schema = f"{key_col} string, json_response string"
-    return spark.createDataFrame(rows, schema)
+        ts_col = ts_col or "ts"
+        stamps = [rec[ts_field] for rec in records]
+        parsed = [
+            datetime.fromisoformat(t.replace(" ", "T")[:26]) if isinstance(t, str) else t
+            for t in stamps
+        ]
+        columns[ts_col] = pa.array(parsed, pa.timestamp("us"))
+        fields.append(f"{ts_col} timestamp")
+    columns["json_response"] = pa.array(
+        [json.dumps(rec, ensure_ascii=False, default=str) for rec in records], pa.string()
+    )
+    fields.append("json_response string")
+    return spark.createDataFrame(pa.table(columns), ", ".join(fields))
 
 
 def fetch_pages_distributed(

@@ -213,13 +213,16 @@ def test_jdbc_watermark_interchangeable_with_parquet_store(spark, url, tmp_path)
     jw.ensure_table(spark)
     pw = WatermarkStore(str(tmp_path / "wm"))
     d0 = datetime(2022, 1, 1)
+    assert jw.read_last_loaded_ts(spark, "wf", d0) == pw.read_last_loaded_ts(spark, "wf", d0) == d0
+    # non-monotone on purpose: both stores are forward-only, so the February
+    # replay is a no-op in each and they agree after every write
     seq = [datetime(2022, 3, 1), datetime(2022, 2, 1), datetime(2022, 4, 1)]
-    for ts in seq:
+    held = [datetime(2022, 3, 1), datetime(2022, 3, 1), datetime(2022, 4, 1)]
+    for ts, want in zip(seq, held):
         jw.write_last_loaded_ts(spark, "wf", ts)
         pw.write_last_loaded_ts(spark, "wf", ts)
-    # NOTE: the parquet store trusts caller ordering (write-after-data), the
-    # JDBC store additionally guards in SQL; on a monotone caller both agree.
-    assert jw.read_last_loaded_ts(spark, "wf", d0) == datetime(2022, 4, 1)
+        assert jw.read_last_loaded_ts(spark, "wf", d0) == want
+        assert pw.read_last_loaded_ts(spark, "wf", d0) == want
 
 
 def test_full_dag_runs_on_jdbc_warehouse_and_matches_lakehouse(spark, url, tmp_path):

@@ -5,8 +5,13 @@ golden ledger output; plus re-run idempotency."""
 
 from __future__ import annotations
 
+import glob
+import os
+import time
+from datetime import datetime
 from decimal import Decimal as D
 
+import pyarrow.parquet as pq
 import pytest
 
 from airflow_courier_payout_ledger_pipeline_spark import schemas as S
@@ -63,6 +68,29 @@ DAY2_DELIVERIES = DAY1_DELIVERIES + [
 @pytest.fixture()
 def lake(tmp_path):
     return Lakehouse(str(tmp_path / "lake"))
+
+
+def jobs_fired(spark, group: str, fn) -> int:
+    """Run ``fn`` under its own Spark job group; the number of jobs it fired."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _run_fixture_days(spark, lake) -> None:
+    P.run_daily(
+        spark, lake, fake_api(DAY1_COURIERS), fake_api(DAY1_DELIVERIES, "delivery_ts"),
+        "2023-05-11",
+    )
+    P.run_daily(
+        spark, lake, fake_api(DAY2_COURIERS), fake_api(DAY2_DELIVERIES, "delivery_ts"),
+        "2023-05-12",
+    )
 
 
 def _ledger(spark, lake):
@@ -238,3 +266,90 @@ def test_distributed_fetch_paces_requests(spark):
     )
     assert df.count() == 200
     assert time.time() - t0 >= 3 * 0.2
+
+
+def _lake_outputs(lake) -> dict:
+    """The chain's outputs read with pyarrow straight from the lake: timestamps
+    come back as naive UTC wall-clock values, so nothing here passes through
+    the driver process's zone."""
+
+    def rows(layer: str, table: str) -> list[dict]:
+        files = sorted(glob.glob(os.path.join(lake.path(layer, table), "**", "*.parquet"),
+                                 recursive=True))
+        return sorted((r for f in files for r in pq.read_table(f).to_pylist()), key=repr)
+
+    marks = {
+        r["workflow_key"]: r["workflow_settings"]
+        for layer in ("stg", "dds")
+        for r in rows(layer, "srv_wf_settings")
+    }
+    return {
+        "dm_timestamps": rows("dds", "dm_timestamps"),
+        "fct_deliveries": rows("dds", "fct_deliveries"),
+        "dm_courier_ledger": rows("cdm", "dm_courier_ledger"),
+        "watermarks": marks,
+    }
+
+
+@pytest.fixture()
+def new_york_driver(monkeypatch):
+    """The driver process runs in New York; the JVM and the session zone (UTC)
+    stay where they are."""
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_chain_does_not_depend_on_driver_time_zone(spark, tmp_path, request):
+    """Payload timestamps and cursors live in the session zone: a driver in
+    another zone must land the same calendar dim, facts, watermarks and mart."""
+    utc = Lakehouse(str(tmp_path / "utc"))
+    _run_fixture_days(spark, utc)
+    want = _lake_outputs(utc)
+    # anchor the UTC run itself: payload '2023-05-10 10:00:00' is 10:00 UTC
+    assert datetime(2023, 5, 10, 10) in {r["ts"] for r in want["dm_timestamps"]}
+    assert want["watermarks"] == {
+        P.STG_WM_KEY: '{"last_loaded_ts": "2023-05-11 09:00:00"}',
+        P.DDS_WM_KEY: '{"last_loaded_ts": "2023-05-11 09:00:00"}',
+    }
+
+    request.getfixturevalue("new_york_driver")
+    assert time.localtime(0).tm_hour == 19  # the driver really is in New York
+    ny = Lakehouse(str(tmp_path / "ny"))
+    _run_fixture_days(spark, ny)
+    got = _lake_outputs(ny)
+    for table in want:
+        assert got[table] == want[table], table
+
+
+#: Spark jobs each DAG task fires on the fixture's steady day 2, pinned at
+#: today's exact counts: tightening a budget is free, loosening one is a
+#: reviewed decision recorded in CHANGES.md.
+JOB_BUDGET = {
+    "load_couriers": 4,
+    "load_deliveries": 5,
+    "couriers_stg_to_dds": 5,
+    "timestamps_stg_to_dds": 5,
+    "orders_stg_to_dds": 4,
+    "deliveries_stg_to_dds": 17,
+    "courier_ledger_update": 12,
+}
+
+
+def test_steady_day_spark_job_budget(spark, lake):
+    P.run_daily(
+        spark, lake, fake_api(DAY1_COURIERS), fake_api(DAY1_DELIVERIES, "delivery_ts"),
+        "2023-05-11",
+    )
+    couriers, deliveries = fake_api(DAY2_COURIERS), fake_api(DAY2_DELIVERIES, "delivery_ts")
+    steps = {
+        "load_couriers": lambda: P.load_couriers_job(spark, lake, couriers),
+        "load_deliveries": lambda: P.load_deliveries_job(spark, lake, deliveries, "2023-05-12"),
+    }
+    for name in list(JOB_BUDGET)[2:]:
+        steps[name] = lambda name=name: getattr(P, f"{name}_job")(spark, lake)
+    got = {name: jobs_fired(spark, f"test_job_budget:{name}", step) for name, step in steps.items()}
+    over = {n: (got[n], b) for n, b in JOB_BUDGET.items() if got[n] > b}
+    assert not over, f"jobs over budget (fired, budget): {over}"
